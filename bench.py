@@ -69,13 +69,29 @@ def _load_ab_registry(gitref: str):
     be timed INTERLEAVED in one warm session (per-key noise hits both
     variants alike, which single full runs on this shared host cannot
     guarantee; observed 1.5-5x swings on identical code). Additive
-    only: without BENCH_AB the bench path is byte-identical."""
+    only: without BENCH_AB the bench path is byte-identical.
+
+    The temp tree, ``sys.path`` and ``PYTHONPATH`` are restored at
+    process exit."""
+    import atexit
     import re
+    import shutil
     import subprocess
     import tempfile
 
     repo = os.path.dirname(os.path.abspath(__file__))
     work = tempfile.mkdtemp(prefix="bench_ab_")
+    saved_pythonpath, saved_path = os.environ.get("PYTHONPATH"), list(sys.path)
+
+    def _restore() -> None:
+        if saved_pythonpath is None:
+            os.environ.pop("PYTHONPATH", None)
+        else:
+            os.environ["PYTHONPATH"] = saved_pythonpath
+        sys.path[:] = saved_path
+        shutil.rmtree(work, ignore_errors=True)
+
+    atexit.register(_restore)
     tar = subprocess.run(
         ["git", "-C", repo, "archive", gitref, "bigdata1_spark"],
         check=True,
@@ -174,14 +190,16 @@ def main() -> None:
         samples = []
         ab_samples = []
         try:
-            for _ in range(RUNS):
-                if ab_fn is not None:  # ref first, HEAD second, each rep
+            for rep in range(RUNS):
+                variants = [(fn, samples)]
+                if ab_fn is not None:
+                    # ref first on even reps, HEAD first on odd ones, so
+                    # neither variant always gets the warm-cache slot
+                    variants.insert(rep % 2, (ab_fn, ab_samples))
+                for variant, acc in variants:
                     t0 = time.perf_counter()
-                    _materialize(ab_fn(spark, SF_DIR))
-                    ab_samples.append(time.perf_counter() - t0)
-                t0 = time.perf_counter()
-                _materialize(fn(spark, SF_DIR))
-                samples.append(time.perf_counter() - t0)
+                    _materialize(variant(spark, SF_DIR))
+                    acc.append(time.perf_counter() - t0)
         except Exception as exc:  # one broken query must not kill the run
             errors[key] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"[bench] {key} FAILED: {errors[key]}", file=sys.stderr)

@@ -26,6 +26,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from bigdata1_spark.streaming.events import drain
+
 PYDS_ROWS = 5000
 PYDS_PARTITIONS = 8
 
@@ -87,11 +89,9 @@ def python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2 data chunks = 2 query lifecycles: the minimum that still proves
 # cross-restart offset resume (1 chunk would never exercise a resumed
 # offset; more only adds lifecycle overhead, ~2-3.5 s each at bench
-# scale). Exhaustion is asserted from the checkpoint's own committed
-# offset (a driver-side metadata read) instead of the r15 form's third,
-# empty confirming lifecycle — guide §1.2: that lifecycle was a full
-# round of stream planning/offset-log/commit machinery spent proving a
-# number already sitting in the offset log.
+# scale). Exhaustion is read from the last lifecycle's public progress
+# (the source's end offset), so no third, empty lifecycle runs just to
+# confirm that nothing is left.
 STREAM_ROWS = 4000
 STREAM_STEP = 2000
 
@@ -148,65 +148,29 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     run consumes exactly the chunks the source exposes and the next run
     resumes from the persisted offset — the restart loop proves the
     custom source honors the offset/replay contract, not just that it
-    can emit rows. The drain stops when the checkpoint's committed
-    offset shows the source exhausted (``pos >= STREAM_ROWS``) — the
-    offset log the NEXT restart would resume from, read driver-side,
-    so exhaustion costs a file read instead of a third full (empty)
-    query lifecycle.
+    can emit rows. The drain stops when the stopped query's last
+    progress reports the source's end offset at ``STREAM_ROWS`` (no
+    progress at all means no batch ran: nothing was left to read), so
+    exhaustion costs no third, empty query lifecycle.
 
     Rows are the same pure md5 function of the row id as
     ``python_datasource``, so the oracle regenerates the full table and
     the monthly rollup is value-hash checked. Columns: month, n,
     bid_sum.
     """
-    import glob
-    import json
-    import os
-    import shutil
-    import tempfile
-
     spark.dataSource.register(BillingStreamSource)
-    work = tempfile.mkdtemp(prefix="bigdata1_pyds_stream_")
-    try:
-        out = os.path.join(work, "out")
 
-        def write_batch(bdf, bid):
-            bdf.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch={bid}")
-            )
+    def exhausted(progress: dict | None) -> bool:
+        return (
+            progress is None
+            or progress["sources"][0]["endOffset"]["pos"] >= STREAM_ROWS
+        )
 
-        def committed_pos() -> int:
-            """Latest committed source offset from the checkpoint's
-            offset log (file ``ckpt/offsets/<batchId>``; last line is
-            the source's own offset JSON — the replay-contract file a
-            restart resumes from)."""
-            files = [
-                f
-                for f in glob.glob(os.path.join(work, "ckpt", "offsets", "*"))
-                if os.path.basename(f).isdigit()
-            ]
-            if not files:
-                return -1
-            latest = max(files, key=lambda p: int(os.path.basename(p)))
-            with open(latest) as fh:
-                return json.loads(fh.read().splitlines()[-1])["pos"]
-
-        for _ in range(STREAM_ROWS // STREAM_STEP + 1):
-            q = (
-                spark.readStream.format("pybillstream")
-                .load()
-                .writeStream.foreachBatch(write_batch)
-                .outputMode("append")
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            if committed_pos() >= STREAM_ROWS:
-                break
-        res = (
+    return drain(
+        spark,
+        lambda _src: spark.readStream.format("pybillstream").load(),
+        None,
+        read=lambda out: (
             spark.read.parquet(out)
             .drop("batch")
             .groupBy("month")
@@ -214,10 +178,10 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n"),
                 F.sum("bid").alias("bid_sum"),
             )
-        )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        lifecycles=STREAM_ROWS // STREAM_STEP + 1,
+        until=exhausted,
+    )
 
 
 # ---------------------------------------------------------------------------

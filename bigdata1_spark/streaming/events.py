@@ -9,13 +9,30 @@ logical plan is mode-agnostic.
 Stream inputs are parquet-directory sources: at scale this is the
 standard file-drop ingestion pattern (object-store prefix, exactly-once
 per file); tests materialize a temp directory from the testdata file.
+
+Every registry-facing ``*_streamed`` key is a stream builder plus one
+:func:`drain` call. ``drain`` replays the bounded source with
+``trigger(availableNow=True)`` — the batch-like replay mode used for
+backfills: the source drains and the query terminates — through a
+``foreachBatch`` parquet sink that is idempotent under replay. Complete
+mode overwrites the whole output with each batch, whose rows are the
+full result; append mode writes each micro-batch to its own
+``batch=<id>`` directory, so a re-run batch overwrites only its own
+output and the read-back is the union. The sink is read back as a batch
+DataFrame; with the default sink, a source that ran no micro-batch reads
+back as an empty frame with the stream's schema, in either mode.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
+import json
 import math
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,6 +94,117 @@ def _state_sized_partitions(
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _copy_events(
+    sf_dir: str, names: tuple[str, ...] = ("events.parquet",)
+) -> Callable[[str], str]:
+    """``drain`` source: ``work/src`` holding the events file once per
+    name."""
+
+    def fill(work: str) -> str:
+        src = os.path.join(work, "src")
+        os.makedirs(src)
+        for name in names:
+            shutil.copy(
+                os.path.join(sf_dir, "events.parquet"),
+                os.path.join(src, name),
+            )
+        return src
+
+    return fill
+
+
+def drain(
+    spark: SparkSession,
+    build: Callable[[str | None], DataFrame],
+    source: Callable[[str], str] | None,
+    *,
+    mode: str = "append",
+    write_batch: Callable[[DataFrame, int, str], None] | None = None,
+    read: Callable[[str], DataFrame] | None = None,
+    python_state: bool = False,
+    lifecycles: int = 1,
+    until: Callable[[dict | None], bool] | None = None,
+) -> DataFrame:
+    """Run a bounded stream to completion in a temp workspace and return
+    what its sink wrote, pinned as a batch DataFrame.
+
+    ``source(work)`` fills the workspace and returns the source
+    directory (``None``: the stream reads no files) and ``build(src)``
+    returns the unstarted stream. The query runs with
+    ``trigger(availableNow=True)`` on ``work/ckpt`` under
+    :func:`_state_sized_partitions`. Its ``foreachBatch`` sink follows
+    the module contract: ``mode="complete"`` overwrites ``work/out``,
+    append mode writes ``work/out/batch=<id>``. A caller with its own
+    merge passes ``write_batch(batch_df, batch_id, out)`` and a caller
+    with its own read-back passes ``read(out)``.
+
+    ``until`` restarts the query on the same checkpoint, at most
+    ``lifecycles`` times, until it returns True for the stopped query's
+    ``lastProgress`` as a dict (``None`` when no batch ran); a source
+    still unfinished after the last lifecycle raises.
+
+    The read-back is ``localCheckpoint``-ed before the workspace is
+    removed. With the default sink and read-back, a source that ran no
+    micro-batch never creates ``out`` and reads back as an empty frame
+    with the stream's schema; a custom sink or read-back meets the
+    missing directory itself, because only the caller knows its schema.
+    """
+    work = tempfile.mkdtemp(prefix="bigdata1_drain_")
+    try:
+        src = source(work) if source is not None else None
+        stream = build(src)
+        out = os.path.join(work, "out")
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            if write_batch is not None:
+                write_batch(batch_df, batch_id, out)
+            elif mode == "complete":
+                batch_df.write.mode("overwrite").parquet(out)
+            else:
+                batch_df.write.mode("overwrite").parquet(
+                    os.path.join(out, f"batch={batch_id}")
+                )
+
+        sized = (
+            _state_sized_partitions(spark, src, python_state=python_state)
+            if src is not None
+            else contextlib.nullcontext()
+        )
+        with sized:
+            for _ in range(lifecycles):
+                query = (
+                    stream.writeStream.foreachBatch(sink)
+                    .outputMode(mode)
+                    .option("checkpointLocation", os.path.join(work, "ckpt"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                query.awaitTermination()
+                if until is None:
+                    break
+                # parse the progress JSON: item access on the progress
+                # object hands offsets back as Python-repr strings
+                progress = query.lastProgress
+                if until(
+                    None if progress is None else json.loads(progress.json)
+                ):
+                    break
+            else:
+                raise RuntimeError(
+                    f"stream not exhausted after {lifecycles} lifecycles"
+                )
+        if write_batch is None and read is None and not os.path.isdir(out):
+            return spark.createDataFrame([], stream.schema).localCheckpoint(
+                eager=True
+            )
+        # batch=<id> reads back as an inferred partition column — sink
+        # bookkeeping, not part of the result contract.
+        back = read(out) if read else spark.read.parquet(out).drop("batch")
+        return back.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def _windowed(events: DataFrame) -> DataFrame:
     """Tumbling-window aggregation shared by batch and streaming:
     per (hour, event_type): event count + exact value sum."""
@@ -118,107 +246,50 @@ def events_window_stream(spark: SparkSession, source_dir: str) -> DataFrame:
 
 def events_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry-facing end-to-end streaming run of the windowed agg:
-    parquet file source → watermark + tumbling window → ``foreachBatch``
-    parquet sink → read the sink back as a batch DataFrame.
+    parquet file source → watermark + tumbling window → :func:`drain`
+    in complete mode → batch DataFrame.
 
     This gives the streaming path a full driver CORRECTNESS row against
     the SAME oracle as its batch twin ``events_window`` (identical
     logical plan via ``_windowed``); the stream-vs-batch tests already
     prove equivalence, this key banks it through the driver hash.
-
-    The sink pattern is the production one: ``foreachBatch`` with an
-    idempotent mode=overwrite write, so a replayed micro-batch after a
-    failure rewrites the same output instead of duplicating it. With
-    ``trigger(availableNow=True)`` the bounded source drains in one run
-    and the query terminates — the batch-like replay mode used for
-    backfills. At 100 TB the only change is the sink path (object
-    store) and partitioning of the output; state stays bounded by the
-    watermark either way. Complete output mode keeps every window in
-    the result so the bounded replay matches the batch answer exactly.
+    At 100 TB the only change is the sink path (object store) and
+    partitioning of the output; state stays bounded by the watermark
+    either way. Complete output mode keeps every window in the result
+    so the bounded replay matches the batch answer exactly.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_events_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        out = os.path.join(work, "out")
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out)
-
-        with _state_sized_partitions(spark, src):
-            query = (
-                events_window_stream(spark, src)
-                .writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        # Pin the (hours × event-types)-sized result before the temp
-        # sink dir disappears with the finally-block cleanup.
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return drain(
+        spark,
+        lambda src: events_window_stream(spark, src),
+        _copy_events(sf_dir),
+        mode="complete",
+    )
 
 
 def events_user_counts_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry-facing end-to-end run of the per-user running-count
-    stream (``user_running_counts_stream``): bounded availableNow
-    replay through a foreachBatch overwrite sink, returned as a batch
+    stream (``user_running_counts_stream``), returned as a batch
     DataFrame whose final state equals the batch groupBy — giving the
     UPDATE-mode stateful-aggregation path its own driver row next to
     ``events_window_streamed``'s append-mode windowed one.
 
     Complete output mode means the last micro-batch carries the full
-    aggregate state, so the idempotent overwrite sink lands exactly
-    the batch answer. last_seen is projected to a string the same way
-    both engines format timestamps under UTC.
+    aggregate state, so the overwrite sink lands exactly the batch
+    answer. last_seen is projected to a string the same way both
+    engines format timestamps under UTC.
     Columns: user_id, n_events, last_seen.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_user_counts_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        out = os.path.join(work, "out")
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out)
-
-        counts = user_running_counts_stream(spark, src).select(
+    return drain(
+        spark,
+        lambda src: user_running_counts_stream(spark, src).select(
             "user_id",
             "n_events",
             F.date_format("last_seen", "yyyy-MM-dd HH:mm:ss")
             .alias("last_seen"),
-        )
-        with _state_sized_partitions(spark, src):
-            query = (
-                counts.writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        _copy_events(sf_dir),
+        mode="complete",
+    )
 
 
 def salted_agg_stream(
@@ -266,48 +337,28 @@ def events_salted_agg_streamed(
     associatively, so the sink result equals the plain groupBy — which
     is exactly what the shared ``skew_salted_agg`` oracle pins.
     Complete output mode means the final micro-batch carries the full
-    partial-state table and the overwrite sink is replay-safe.
+    partial-state table, so the merged overwrite is replay-safe.
     Columns: event_type, n_events, total_value.
     """
-    import os
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="bigdata1_salted_agg_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
+    def final_merge(batch_df: DataFrame, _batch_id: int, out: str) -> None:
+        (
+            batch_df.groupBy("event_type")
+            .agg(
+                F.sum("pn").cast("long").alias("n_events"),
+                F.sum("pv").cast("double").alias("total_value"),
+            )
+            .write.mode("overwrite")
+            .parquet(out)
         )
-        out = os.path.join(work, "out")
 
-        partial = salted_agg_stream(spark, src, n_salts)
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            (
-                batch_df.groupBy("event_type")
-                .agg(
-                    F.sum("pn").cast("long").alias("n_events"),
-                    F.sum("pv").cast("double").alias("total_value"),
-                )
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-
-        with _state_sized_partitions(spark, src):
-            query = (
-                partial.writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return drain(
+        spark,
+        lambda src: salted_agg_stream(spark, src, n_salts),
+        _copy_events(sf_dir),
+        mode="complete",
+        write_batch=final_merge,
+    )
 
 
 def _read_events_stream(
@@ -466,30 +517,27 @@ def events_salted_join_streamed(
     (salting must not change the result multiset). Columns: user_id,
     click_id, click_ts, purchase_ts, purchase_value.
     """
-    import os
-    import shutil
-    import tempfile
+    return drain(
+        spark,
+        lambda src: _join_columns(
+            click_purchase_join_stream_salted(spark, src)
+        ),
+        _copy_events(sf_dir),
+    )
 
-    work = tempfile.mkdtemp(prefix="bigdata1_salted_join_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        joined = click_purchase_join_stream_salted(spark, src).select(
-            "user_id",
-            "click_id",
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("click_ts"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("purchase_ts"),
-            "purchase_value",
-        )
-        return _run_bounded_append(spark, joined, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+def _join_columns(joined: DataFrame) -> DataFrame:
+    """Attribution-join result columns with the timestamps formatted the
+    way both engines print them under UTC."""
+    return joined.select(
+        "user_id",
+        "click_id",
+        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .alias("click_ts"),
+        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .alias("purchase_ts"),
+        "purchase_value",
+    )
 
 
 def dedup_stream(
@@ -541,8 +589,6 @@ def _flush_source(
     deterministic filters below EventTimeWatermark, which would stop
     the sentinels from advancing the clock).
     """
-    import shutil
-
     src = os.path.join(work, "src")
     os.makedirs(src)
     data_file = os.path.join(src, "00_events.parquet")
@@ -689,9 +735,6 @@ def _write_sentinels_spark(
 ) -> None:
     """Original Spark-job sentinel writer, kept as the fallback for
     events encodings the arrow fast path can't interpret."""
-    import glob
-    import shutil
-
     ev = load_table(spark, sf_dir, "events")
     max_ts = ev.agg(F.max("ts")).first()[0]
     for i, days in enumerate((7, 14), start=1):
@@ -981,58 +1024,11 @@ def _rocksdb_state_store(spark: SparkSession):
             spark.conf.set(key, old)
 
 
-def _run_bounded_append(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    work: str,
-    python_state: bool = False,
-) -> DataFrame:
-    """Drain a bounded APPEND-mode stream through a foreachBatch sink
-    that writes each micro-batch to its own ``batch=<id>`` directory —
-    idempotent under replay (a re-run micro-batch overwrites ITS OWN
-    directory, never a neighbor's), correct under multiple batches
-    (unlike a whole-output overwrite, which only complete-mode
-    aggregations can afford). This is the production object-store
-    pattern; reading the directory tree back returns the union."""
-    import os
-
-    out = os.path.join(work, "out")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch={batch_id}")
-        )
-
-    with _state_sized_partitions(
-        spark, os.path.join(work, "src"), python_state=python_state
-    ):
-        query = (
-            stream_df.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    # a bounded stream over an empty source produces zero micro-batches
-    # and never creates the sink directory — surface that as an empty
-    # result with the stream's schema, not an AnalysisException
-    if not os.path.isdir(out):
-        return spark.createDataFrame(
-            [], stream_df.schema
-        ).localCheckpoint(eager=True)
-    # batch=<id> reads back as an inferred partition column — sink
-    # bookkeeping, not part of the result contract.
-    return (
-        spark.read.parquet(out).drop("batch").localCheckpoint(eager=True)
-    )
-
-
 def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry-facing end-to-end run of the stream-stream interval
     join (``click_purchase_join_stream``): clicks attributed to same-
-    user purchases within 1 hour, drained with availableNow through the
-    idempotent per-batch sink and returned as a batch DataFrame.
+    user purchases within 1 hour, drained by :func:`drain` in append
+    mode.
 
     This banks the THIRD streaming pattern (after the append-mode
     windowed agg and the update-mode stateful count) through a full
@@ -1041,30 +1037,11 @@ def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join. Columns: user_id, click_id, click_ts, purchase_ts,
     purchase_value.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_attribution_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        joined = click_purchase_join_stream(spark, src).select(
-            "user_id",
-            "click_id",
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("click_ts"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("purchase_ts"),
-            "purchase_value",
-        )
-        return _run_bounded_append(spark, joined, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return drain(
+        spark,
+        lambda src: _join_columns(click_purchase_join_stream(spark, src)),
+        _copy_events(sf_dir),
+    )
 
 
 def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,29 +1057,17 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivered rows. Columns: event_id, user_id, event_type, ts_s,
     value.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_dedup_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        for copy_name in ("events_a.parquet", "events_b.parquet"):
-            shutil.copy(
-                os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, copy_name),
-            )
-        deduped = dedup_stream(spark, src).select(
+    return drain(
+        spark,
+        lambda src: dedup_stream(spark, src).select(
             "event_id",
             "user_id",
             "event_type",
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
             "value",
-        )
-        return _run_bounded_append(spark, deduped, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        _copy_events(sf_dir, ("events_a.parquet", "events_b.parquet")),
+    )
 
 
 SLIDE_DURATION = "2 hours"
@@ -1155,43 +1120,19 @@ def sliding_stream(spark: SparkSession, source_dir: str) -> DataFrame:
 
 def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming run of the sliding-window agg: watermark +
-    overlapping windows → complete-mode foreachBatch overwrite sink →
-    read back. Same oracle as the batch twin ``events_sliding``
-    (identical logical plan via ``_sliding``); proves overlapping
-    window-state handling, the one streaming shape the tumbling keys
-    don't cover. State at scale: windows-per-event is duration/slide
-    (2 here) — state size is bounded by watermark horizon × slide
-    count, independent of input volume."""
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_events_sliding_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        out = os.path.join(work, "out")
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out)
-
-        with _state_sized_partitions(spark, src):
-            query = (
-                sliding_stream(spark, src)
-                .writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    overlapping windows → :func:`drain` in complete mode. Same oracle
+    as the batch twin ``events_sliding`` (identical logical plan via
+    ``_sliding``); proves overlapping window-state handling, the one
+    streaming shape the tumbling keys don't cover. State at scale:
+    windows-per-event is duration/slide (2 here) — state size is
+    bounded by watermark horizon × slide count, independent of input
+    volume."""
+    return drain(
+        spark,
+        lambda src: sliding_stream(spark, src),
+        _copy_events(sf_dir),
+        mode="complete",
+    )
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -1242,16 +1183,12 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: batch latest-event-per-user over the events table.
     Columns: user_id, event_id, event_type, ts_s, value.
     """
-    import glob
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="bigdata1_upsert_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
+    def halves(work: str) -> str:
         # Split the source deterministically into two half-files so the
         # bounded drain produces two ordered micro-batches.
+        src = os.path.join(work, "src")
+        os.makedirs(src)
         ev = load_table(spark, sf_dir, "events")
         for i in range(2):
             half_dir = os.path.join(work, f"half{i}")
@@ -1262,48 +1199,39 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst = os.path.join(src, f"{i:02d}.parquet")
             shutil.move(part, dst)
             os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-        out = os.path.join(work, "out")
-        os.makedirs(out)
+        return src
 
-        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-            versions = sorted(glob.glob(os.path.join(out, "v=*")))
-            prev = (
-                spark.read.parquet(versions[-1])
-                if versions
-                else batch_df.limit(0)
-            )
-            merged = _latest_per_user(
-                prev.unionByName(_latest_per_user(batch_df))
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(out, f"v={batch_id:05d}")
-            )
+    def merge_batch(batch_df: DataFrame, batch_id: int, out: str) -> None:
+        versions = sorted(glob.glob(os.path.join(out, "v=*")))
+        prev = (
+            spark.read.parquet(versions[-1]) if versions else batch_df.limit(0)
+        )
+        merged = _latest_per_user(prev.unionByName(_latest_per_user(batch_df)))
+        merged.write.mode("overwrite").parquet(
+            os.path.join(out, f"v={batch_id:05d}")
+        )
 
-        stream = upsert_source_stream(spark, src)
-        with _state_sized_partitions(spark, src):
-            query = (
-                stream.writeStream.foreachBatch(merge_batch)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+    def latest_version(out: str) -> DataFrame:
         versions = sorted(glob.glob(os.path.join(out, "v=*")))
         if len(versions) < 2:  # explicit raise: survives python -O
             raise AssertionError(
                 f"expected multi-batch upsert, got {len(versions)} versions"
             )
-        final = spark.read.parquet(versions[-1]).select(
+        return spark.read.parquet(versions[-1]).select(
             "user_id",
             "event_id",
             "event_type",
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
             "value",
         )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return drain(
+        spark,
+        lambda src: upsert_source_stream(spark, src),
+        halves,
+        write_batch=merge_batch,
+        read=latest_version,
+    )
 
 
 def session_window_stream(
@@ -1363,17 +1291,12 @@ def events_session_streamed(
     (``>=`` gap boundary). Columns: user_id, session_start,
     session_end, n_events.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_session_stream_")
-    try:
-        src = _flush_source(spark, sf_dir, work)
-        sessions = session_window_stream(spark, src, gap_min)
-        drained = _run_bounded_append(spark, sessions, work)
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    drained = drain(
+        spark,
+        lambda src: session_window_stream(spark, src, gap_min),
+        lambda work: _flush_source(spark, sf_dir, work),
+    )
+    return drained.filter(F.col("user_id") >= 0)
 
 
 def events_stateful_sessions_streamed(
@@ -1393,28 +1316,28 @@ def events_stateful_sessions_streamed(
     driver hash row. Columns: user_id, session_start, session_end,
     n_events.
     """
-    import shutil
-    import tempfile
+    drained = drain(
+        spark,
+        lambda src: _session_columns(
+            sessionize_stream(spark, src, max_files_per_trigger=1)
+        ),
+        lambda work: _flush_source(spark, sf_dir, work),
+        python_state=True,
+    )
+    return drained.filter(F.col("user_id") >= 0)
 
-    work = tempfile.mkdtemp(prefix="bigdata1_stateful_sess_")
-    try:
-        src = _flush_source(spark, sf_dir, work)
-        sessions = sessionize_stream(
-            spark, src, max_files_per_trigger=1
-        ).select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_start"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_end"),
-            "n_events",
-        )
-        drained = _run_bounded_append(
-            spark, sessions, work, python_state=True
-        )
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+def _session_columns(sessions: DataFrame) -> DataFrame:
+    """Sessionizer result columns with the session bounds formatted the
+    way both engines print them under UTC."""
+    return sessions.select(
+        "user_id",
+        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .alias("session_start"),
+        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .alias("session_end"),
+        "n_events",
+    )
 
 
 def events_tws_sessions_streamed(
@@ -1440,29 +1363,16 @@ def events_tws_sessions_streamed(
     provider switch and restores the session default afterward.
     Columns: user_id, session_start, session_end, n_events.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_tws_sess_")
-    try:
-        src = _flush_source(spark, sf_dir, work)
-        sessions = sessionize_stream_tws(
-            spark, src, max_files_per_trigger=1
-        ).select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_start"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_end"),
-            "n_events",
+    with _rocksdb_state_store(spark):
+        drained = drain(
+            spark,
+            lambda src: _session_columns(
+                sessionize_stream_tws(spark, src, max_files_per_trigger=1)
+            ),
+            lambda work: _flush_source(spark, sf_dir, work),
+            python_state=True,
         )
-        with _rocksdb_state_store(spark):
-            drained = _run_bounded_append(
-                spark, sessions, work, python_state=True
-            )
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return drained.filter(F.col("user_id") >= 0)
 
 
 def click_purchase_leftjoin_stream(
@@ -1528,20 +1438,14 @@ def events_leftjoin_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: user_id, click_id, click_ts, purchase_ts, purchase_value
     (last two NULL for unmatched clicks).
     """
-    import shutil
-    import tempfile
-
-    horizon = "1 hour"
-    work = tempfile.mkdtemp(prefix="bigdata1_leftjoin_stream_")
-    try:
-        src = _flush_source(
+    drained = drain(
+        spark,
+        lambda src: click_purchase_leftjoin_stream(spark, src, "1 hour"),
+        lambda work: _flush_source(
             spark, sf_dir, work, event_types=("click", "purchase")
-        )
-        joined = click_purchase_leftjoin_stream(spark, src, horizon)
-        drained = _run_bounded_append(spark, joined, work)
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
+    return drained.filter(F.col("user_id") >= 0)
 
 
 def enrich_stream(
@@ -1580,18 +1484,8 @@ def events_enrich_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     join run fully in batch. Columns: event_id, user_id, event_type,
     ts_s, cohort.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_enrich_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        enriched = enrich_stream(spark, src, sf_dir)
-        return _run_bounded_append(spark, enriched, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return drain(
+        spark,
+        lambda src: enrich_stream(spark, src, sf_dir),
+        _copy_events(sf_dir),
+    )

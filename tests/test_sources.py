@@ -228,11 +228,11 @@ def test_all_queries_survive_empty_tables(spark, tmp_path, sf_dir):
 # --- r16 optimization contracts -------------------------------------------
 
 def test_stream_reader_offset_shape():
-    """python_stream_source's r16 termination reads the committed offset
-    from the checkpoint's offset log instead of running a third (empty)
-    query lifecycle — pin the reader-side offset contract that read
-    depends on: dict offsets of the form {"pos": N} advancing by
-    STREAM_STEP up to STREAM_ROWS."""
+    """python_stream_source stops once the last lifecycle's progress
+    reports the source's end offset at STREAM_ROWS, instead of running
+    a third (empty) query lifecycle — pin the reader-side offset
+    contract that check depends on: dict offsets of the form
+    {"pos": N} advancing by STREAM_STEP up to STREAM_ROWS."""
     from bigdata1_spark.sources import pydatasource as p
 
     r = p.BillingStreamReader({})
@@ -246,6 +246,39 @@ def test_stream_reader_offset_shape():
     # exhausted source: offset stops advancing (the loop's exit signal)
     it, off2 = r.read(off)
     assert off2 == off and list(it) == []
+
+
+def test_python_stream_source_lifecycle_count(spark, sf_dir):
+    """The resume loop starts exactly one query per data chunk
+    (STREAM_ROWS // STREAM_STEP): exhaustion comes from the last
+    lifecycle's progress, so no extra empty lifecycle may run."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from bigdata1_spark.sources import pydatasource as p
+
+    class Starts(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.n = 0
+
+        def onQueryStarted(self, event) -> None:
+            self.n += 1
+
+        def onQueryProgress(self, event) -> None:
+            pass
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            pass
+
+    starts = Starts()
+    spark.streams.addListener(starts)
+    try:
+        p.python_stream_source(spark, sf_dir).collect()
+    finally:
+        spark.streams.removeListener(starts)
+    assert starts.n == p.STREAM_ROWS // p.STREAM_STEP == 2
 
 
 def test_bench_ab_registry_loads_head():
@@ -263,13 +296,21 @@ def test_bench_ab_registry_loads_head():
         import pytest
 
         pytest.skip("not a git checkout")
-    _sys.path.insert(0, repo)
-    import bench
+    # the loader points PYTHONPATH and sys.path at the renamed package
+    # for the bench process; keep that out of later tests' workers
+    saved_env, saved_path = dict(os.environ), list(_sys.path)
+    try:
+        _sys.path.insert(0, repo)
+        import bench
 
-    ref_registry = bench._load_ab_registry("HEAD")
-    from bigdata1_spark import registry as live
+        ref_registry = bench._load_ab_registry("HEAD")
+        from bigdata1_spark import registry as live
 
-    assert set(ref_registry.QUERIES) & set(live.QUERIES), "no shared keys"
-    # the wrapper convention (__wrapped__) must survive the rename
-    k = sorted(ref_registry.QUERIES)[0]
-    assert hasattr(ref_registry.QUERIES[k], "__wrapped__")
+        assert set(ref_registry.QUERIES) & set(live.QUERIES), "no shared keys"
+        # the wrapper convention (__wrapped__) must survive the rename
+        k = sorted(ref_registry.QUERIES)[0]
+        assert hasattr(ref_registry.QUERIES[k], "__wrapped__")
+    finally:
+        os.environ.clear()
+        os.environ.update(saved_env)
+        _sys.path[:] = saved_path

@@ -226,13 +226,19 @@ def test_sliding_stream_matches_batch(spark, sf_dir):
 def test_bounded_append_empty_source(spark, tmp_path):
     """A bounded stream over an empty source drains zero micro-batches;
     the sink directory never exists and the drain must hand back an
-    empty frame with the stream's schema instead of raising."""
+    empty frame with the stream's schema instead of raising, in append
+    mode and in complete mode alike."""
     src = tmp_path / "empty_src"
     src.mkdir()
     sdf = spark.readStream.schema("x BIGINT, y STRING").parquet(str(src))
-    out = se._run_bounded_append(spark, sdf, str(tmp_path / "work"))
+    out = se.drain(spark, lambda _src: sdf, None)
     assert out.columns == ["x", "y"]
     assert out.count() == 0
+    counted = se.drain(
+        spark, lambda _src: sdf.groupBy().count(), None, mode="complete"
+    )
+    assert counted.columns == ["count"]
+    assert counted.count() == 0
 
 
 def test_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
