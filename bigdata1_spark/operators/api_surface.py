@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.plans.iterate import observed
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -206,7 +207,7 @@ def observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     obs = Observation("quality_gate")
-    observed = li.observe(
+    gated = li.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum((F.col("l_quantity") < 0).cast("long")).alias("n_neg_qty"),
@@ -216,7 +217,7 @@ def observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_price"),
     )
-    observed.count()  # the action the metrics piggyback on
+    gated.count()  # the action the metrics piggyback on
     # Emit the 1-row result as a pure-JVM plan: createDataFrame([tuple])
     # parallelizes even one row into defaultParallelism pickled slices
     # (measured: a 32-task job, 0.42 s — and coalesce(1) over it is
@@ -224,7 +225,7 @@ def observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range + literals plan is 0.08 s with no Python boundary at all —
     # guide §1.2/§4). Types are pinned by explicit casts, column order
     # by the select list.
-    got = obs.get
+    got = observed(obs)
     typed = [
         ("n_rows", "bigint"),
         ("n_neg_qty", "bigint"),

@@ -18,9 +18,9 @@ Scale notes: every step is a keyed shuffle on node/edge ids; triangle
 counting uses degree-ordered edge orientation (each triangle counted
 from its lowest-degree vertex — the standard arboricity bound that
 keeps wedge generation sub-quadratic on skewed degree distributions);
-PageRank materializes each iteration with ``localCheckpoint`` (cadence
-``_CKPT_EVERY``, re-proven per-round in r16) and sums contributions
-through decimal so partial-agg order cannot drift ranks between runs.
+the iterative operators run their rounds through ``plans.iterate``,
+and PageRank sums contributions through decimal so partial-agg order
+cannot drift ranks between runs.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata1_spark.plans.iterate import iterate
 from bigdata1_spark.sources.tables import load_table, parquet_row_count
 
 # Dense-mode cutoff for triangle counting. The kernel is TILED over
@@ -48,24 +49,6 @@ _DENSE_MAX_NODES = 65536
 # the budget, clamped to [1024, 16384] (floor bounds the loop count,
 # ceiling bounds the zero-padding on tiny graphs).
 _DENSE_TILE_BITS_BUDGET = 1 << 28
-
-# Lineage-truncation cadence for pagerank: checkpoint every N rounds.
-# r15 unrolled all rounds into one job (N=8: guide §1.2 "remove
-# passes") on an interleaved A/B that favored it; the r16 re-proof
-# REVERSED that (VERDICT r15 item 1): interleaved cold-JVM A/B at
-# local[32], min over 5 reps — N=1 3.28 s, N=2 3.86 s, N=8 4.30 s,
-# with the per-rep ordering consistent, and the r16 full-bench context
-# was starker still (unrolled pagerank 19-20 s on all three samples
-# mid-sweep vs ~5 s checkpointed in the r14 driver run). The unrolled
-# 20-exchange/14-RDD-scan single job replans and re-sorts every
-# iteration's SMJ subtree under AQE; per-round materialization keeps
-# each round's plan constant-size, which measures faster at every
-# tested load. Rounds whose output is consumed by more than one
-# downstream subtree per round (kcore's pruned edges, bfs/label_prop's
-# self-union) checkpoint each round for the same reason — but the LAST
-# round's output is consumed exactly once by the final action, so its
-# checkpoint is skipped everywhere.
-_CKPT_EVERY = 1
 
 
 def _co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,10 +404,8 @@ def pagerank(
     across runs, monotone damping bounds) remain as the convergence-
     mode evidence the unrolled oracle cannot give. Each iteration is
     ONE join + ONE aggregate keyed on node id over the checkpointed
-    edge list, materialized with ``localCheckpoint`` every
-    ``_CKPT_EVERY`` rounds (per-round after the r16 A/B — see the
-    constant's comment; the last round is consumed once and skips its
-    checkpoint). Contributions are
+    edge list, run by ``iterate`` (per-round ``localCheckpoint``, the
+    last round lazy). Contributions are
     summed through decimal(27,15): decimal addition is associative, so
     ranks are bit-stable across shuffle orderings — required for any
     resumable 100 TB run. Columns: node_type, node_id, rank (1e-6
@@ -474,7 +455,8 @@ def pagerank(
     from decimal import Decimal
 
     base = float(Decimal(1) - Decimal(str(damping)))
-    for i in range(iters):
+
+    def step(ranks: DataFrame, r: int) -> DataFrame:
         contribs = (
             ranks.join(edges, F.col("node") == F.col("src"))
             .select(
@@ -486,7 +468,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("contrib").cast("double").alias("in_sum"))
         )
-        ranks = nodes.join(contribs, "node", "left").select(
+        return nodes.join(contribs, "node", "left").select(
             "node",
             "outdeg",
             (
@@ -494,13 +476,8 @@ def pagerank(
                 + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
             ).alias("rank"),
         )
-        # per-round materialization (cadence _CKPT_EVERY = 1, measured
-        # faster than the unrolled single job — see the constant's
-        # comment); the last round is consumed once by the final
-        # action, so its checkpoint is skipped
-        if (i + 1) % _CKPT_EVERY == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint()
-    return ranks.select(
+
+    return iterate(ranks, step, iters).select(
         F.when(F.col("node") > 0, F.lit("customer"))
         .otherwise(F.lit("supplier"))
         .alias("node_type"),
@@ -527,36 +504,33 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each round is one degree aggregation plus two semi-join prunes of
     the edge list — all keyed shuffles on node id, no driver-side
-    state; ``localCheckpoint`` truncates lineage per round (the
-    pagerank discipline) so the plan stays round-sized. A fixpoint
+    state; ``iterate`` truncates lineage per round (the pagerank
+    discipline) so the plan stays round-sized. A fixpoint
     loop is the same body under a convergence check; the fixed round
     count is what lets the oracle unroll bit-for-bit into chained
     CTEs. Columns: node, core_degree (degree within the round-3
     subgraph).
     """
     edges = _co_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
-    for r in range(KCORE_ROUNDS):
+
+    def step(edges: DataFrame, r: int) -> DataFrame:
         deg = (
             edges.select(F.explode(F.array("a", "b")).alias("node"))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= KCORE_K).select("node")
-        edges = (
+        return (
             edges.join(
                 keep.withColumnRenamed("node", "a"), "a", "semi"
             )
             .join(keep.withColumnRenamed("node", "b"), "b", "semi")
             .select("a", "b")
         )
-        # each round's edges fan into THREE subtrees next round (the
-        # degree agg + both semi-joins), so intermediate rounds must
-        # materialize — but the last round's output is consumed once
-        # by the final aggregate, so its checkpoint job is skipped
-        if r + 1 < KCORE_ROUNDS:
-            edges = edges.localCheckpoint(eager=True)
+
     return (
-        edges.select(F.explode(F.array("a", "b")).alias("node"))
+        iterate(edges, step, KCORE_ROUNDS)
+        .select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("core_degree"))
     )
@@ -579,8 +553,9 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round: ONE keyed join of the current frontier (nodes first
     discovered last round — never the whole distance table) against
     the bidirectional edge list, ONE min-hop aggregation; the edge
-    list is localCheckpoint-ed once and the distance table per round
-    (the pagerank/kcore lineage discipline), so the plan stays
+    list is localCheckpoint-ed once and ``iterate`` checkpoints the
+    distance table per round (the pagerank/kcore lineage discipline),
+    so the plan stays
     round-sized at any graph size. A fixpoint loop is the same body
     under an empty-frontier check; the fixed round count is what lets
     the oracle unroll bit-for-bit into chained CTEs. Exact integers
@@ -596,27 +571,21 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(BFS_SOURCE).cast("long").alias("node"),
         F.lit(0).cast("long").alias("hop"),
     )
-    for r in range(1, BFS_ROUNDS + 1):
-        frontier = dist.filter(F.col("hop") == r - 1).select("node")
+
+    def step(dist: DataFrame, r: int) -> DataFrame:
+        frontier = dist.filter(F.col("hop") == r).select("node")
         nbrs = frontier.join(
             bidir, frontier["node"] == bidir["src"]
         ).select(
-            F.col("dst").alias("node"), F.lit(r).cast("long").alias("hop")
+            F.col("dst").alias("node"), F.lit(r + 1).cast("long").alias("hop")
         )
-        dist = (
+        return (
             dist.unionAll(nbrs)
             .groupBy("node")
             .agg(F.min("hop").alias("hop"))
         )
-        # dist fans into two subtrees per round (frontier + union), so
-        # intermediate rounds materialize; the last round's output is
-        # consumed once by the caller's action — skip its checkpoint.
-        # NB: THIS loop is 1-based (range(1, BFS_ROUNDS+1) — r is the
-        # hop number), so the skip condition is `r < BFS_ROUNDS`, unlike
-        # kcore/label_prop's 0-based `r + 1 < ROUNDS` (ADVICE r15).
-        if r < BFS_ROUNDS:
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+
+    return iterate(dist, step, BFS_ROUNDS)
 
 
 LABEL_PROP_ROUNDS = 3
@@ -634,7 +603,7 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per round: ONE join of the current labels against the
     bidirectional edge list + ONE min aggregation — the same keyed
-    round shape as bfs_hops, localCheckpoint-bounded. Degree-0 nodes
+    round shape as bfs_hops, run by ``iterate``. Degree-0 nodes
     don't exist in an edge-derived graph; isolated-in-round nodes keep
     their label via the self-union. Exact integers. Columns: node,
     label.
@@ -646,20 +615,18 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = bidir.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for r in range(LABEL_PROP_ROUNDS):
+
+    def step(labels: DataFrame, r: int) -> DataFrame:
         nbr = labels.join(
             bidir, labels["node"] == bidir["src"]
         ).select(F.col("dst").alias("node"), "label")
-        labels = (
+        return (
             labels.unionAll(nbr)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        # labels fans into two subtrees per round (join + self-union);
-        # the last round's output is consumed once — skip its checkpoint
-        if r + 1 < LABEL_PROP_ROUNDS:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+
+    return iterate(labels, step, LABEL_PROP_ROUNDS)
 
 
 def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,71 +936,38 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     output of the round's own materialization job (zero extra jobs —
     a fixpoint makes the remaining rounds no-ops, so early-stop and the
     oracle's full 12-round unroll are bit-identical on every input).
-    ``localCheckpoint`` truncates lineage per round (the ``pagerank``
-    discipline — the plan stays O(1) deep instead of growing per
-    iteration). The component id is the smallest node id in the
-    component — a total, engine-free order. Isolated suppliers (no
+    Both the per-round ``localCheckpoint`` and the probe are
+    ``iterate``'s fixpoint mode, so the plan stays O(1) deep instead
+    of growing per iteration. The component id is the smallest node id
+    in the component — a total, engine-free order. Isolated suppliers (no
     co-order partner) have no edge and are out of contract, matching
     the other graph keys. Columns: node, component.
     """
     # one-pass symmetrize + single checkpoint (see _symmetrized_edges):
     # the old edges-checkpoint-then-union shape paid two
     # materialization jobs for the same bidirectional list
-    sym = (
-        _symmetrized_edges(spark, sf_dir)
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint()
-    )
+    sym = _symmetrized_edges(spark, sf_dir).localCheckpoint()
     labels = (
-        sym.select(F.col("a").alias("node"))
+        sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("component"))
         .localCheckpoint()
     )
-    from pyspark.sql import Observation
 
-    for r in range(CC_ROUNDS):
+    def step(labels: DataFrame, r: int) -> DataFrame:
         nbr_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
+            sym.join(labels, sym.dst == labels.node)
+            .groupBy(F.col("src").alias("node"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        # fixpoint probe as a FREE side output (VERDICT r15 item 5):
-        # a round is a no-op iff no node adopts a smaller neighbor
-        # label, and that comparison is available IN the update row
-        # before the final select — observe() accumulates it executor-
-        # side during the checkpoint materialization job itself, so the
-        # old per-round join+count probe job (a full extra shuffle +
-        # action at scale) disappears. coalesce pins the empty-graph
-        # case (SUM over 0 rows is NULL) to 0 so the loop still exits
-        # on round 1 there. Zero-change condition identical to the old
-        # probe: least(component, nbr) != component ⟺ nbr < component.
-        obs = Observation(f"cc_changed_r{r}")
-        new_labels = (
-            labels.join(nbr_min, "node")
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        (
-                            F.col("nbr_component") < F.col("component")
-                        ).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias("changed"),
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.col("nbr_component")
-                ).alias("component"),
-            )
-            .localCheckpoint()
+        return labels.join(nbr_min, "node").select(
+            "node",
+            F.least("component", "nbr_component").alias("component"),
+            F.col("component").alias("_prev"),
         )
-        labels = new_labels
-        # round 1 cannot be a fixpoint on any graph with an edge, so
-        # changed == 0 at r == 0 only on the empty graph — where
-        # breaking immediately is equally bit-identical (empty result)
-        if obs.get["changed"] == 0:
-            break
-    return labels.select("node", "component")
+
+    # a round is a no-op iff no node adopts a smaller neighbor label;
+    # round 1 changes nothing only on the empty graph, where stopping
+    # at once is equally bit-identical (empty result)
+    changed = F.col("component") < F.col("_prev")
+    return iterate(labels, step, CC_ROUNDS, changed)

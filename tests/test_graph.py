@@ -4,9 +4,15 @@ rows-only PageRank)."""
 
 from __future__ import annotations
 
+import time
+
+import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+import bigdata1_spark.plans.iterate as kernel
 from bigdata1_spark.operators import graph
+from bigdata1_spark.plans.checks import formatted_plan
 
 
 def test_handshake_lemma(spark, sf_dir):
@@ -307,3 +313,77 @@ def test_connected_components_disjoint_blocks(spark, tmp_path):
         for r in graph.connected_components(spark, d).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
+
+
+def test_iterate_fixpoint_stops_after_first_unchanged_round(spark):
+    """Fixpoint mode on two path components (1-2-3, 4-5): rounds 0 and
+    1 change labels, round 2 changes none, so ``step`` runs exactly
+    three times under a cap of ten and the result keeps the state's
+    columns (the ``_prev`` probe column is projected away)."""
+    pairs = [(1, 2), (2, 3), (4, 5)]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src long, dst long"
+    )
+    labels = spark.createDataFrame(
+        [(n, n) for n in range(1, 6)], "node long, label long"
+    )
+    calls = []
+
+    def step(labels, r):
+        calls.append(r)
+        nbr = (
+            labels.join(edges, labels["node"] == edges["src"])
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("nbr"))
+        )
+        return labels.join(nbr, "node").select(
+            "node",
+            F.least("label", "nbr").alias("label"),
+            F.col("label").alias("_prev"),
+        )
+
+    out = kernel.iterate(
+        labels, step, 10, F.col("label") < F.col("_prev")
+    )
+    assert out.columns == ["node", "label"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1), (2, 1), (3, 1), (4, 4), (5, 4)
+    ]
+    assert calls == [0, 1, 2]
+
+
+def test_iterate_fixed_rounds_checkpoint_all_but_last(spark, monkeypatch):
+    """Fixed-round mode materializes ``rounds - 1`` eager checkpoints;
+    the last round stays a lazy projection over round 2's checkpoint
+    rather than a checkpoint of its own."""
+    state = spark.range(4).select(F.col("id").alias("x"))
+    cls = type(state)
+    real = cls.localCheckpoint
+    seen = []
+
+    def counting(self, *args, **kwargs):
+        seen.append((args, kwargs))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    out = kernel.iterate(
+        state, lambda s, r: s.select((F.col("x") + 1).alias("x")), 3
+    )
+    monkeypatch.undo()
+    assert seen == [((), {"eager": True})] * 2
+    physical = formatted_plan(out).split("\n\n")[0]
+    assert "Scan ExistingRDD" in physical and "Project" in physical
+    assert sorted(r.x for r in out.collect()) == [3, 4, 5, 6]
+
+
+def test_observed_times_out_on_a_frame_that_never_ran(spark, monkeypatch):
+    """An observation whose frame never ran an action would block
+    ``Observation.get`` forever; ``observed`` raises ``TimeoutError``
+    naming it once the bound runs out."""
+    monkeypatch.setattr(kernel, "OBSERVED_WAIT_S", 1.0)
+    obs = Observation("never_ran")
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n"))
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="never_ran"):
+        kernel.observed(obs)
+    assert time.monotonic() - t0 < 10

@@ -1057,12 +1057,12 @@ SCAN_BUDGETS = {
     "join_range": 1,
     "join_self_pairs": 1,
     "join_semi": 2,
-    "bfs_hops": 0,  # final plan reads the round-3 localCheckpoint (the kcore/pagerank lineage discipline)
+    "bfs_hops": 0,  # lazy last round reads the round-2 and edge localCheckpoints (iterate's last-round skip)
     "k_anonymity": 1,
     "kcore": 0,
     "kendall_tau": 1,
     "ks_test": 1,
-    "label_prop": 0,  # all-localCheckpoint rounds (the bfs_hops/kcore lineage discipline)
+    "label_prop": 0,  # lazy last round reads the round-2 and edge localCheckpoints (iterate's last-round skip)
     "knn_classify": 2,
     "knn_join": 2,
     "lang_id": 2,
